@@ -19,6 +19,8 @@ CLASSES="${4:-$(dirname "$0")/../target/scala-2.13/classes}"
 # script is invoked by relative path) would ClassNotFound every slice.
 CLASSES=$(cd "$CLASSES" && pwd)
 CP="$CLASSES:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
+# the shared JVM flags (build.sbt reads the same file); read before any cd
+mapfile -t JVM_FLAGS < <(grep -Ev '^[[:space:]]*(#|$)' "$(dirname "$0")/jvm.flags")
 MEM="${JRUN_MEM:-80g}"
 ROOT=/tmp/bench_campaign_$TAG
 rm -rf "$ROOT"; mkdir -p "$ROOT"
@@ -33,21 +35,7 @@ rm -rf "$ROOT"; mkdir -p "$ROOT"
 PROBE_SET="q_dsir,q_salted_join,q_hits,q_median_approx,q_weighted_pctl"
 PROBE_SF="${PROBE_SF:-/root/testdata/sf0.1}"
 run_probes() { # $1 = out file
-  SPARK_GRAFT_CPUS=32 java -Xmx24g -XX:ReservedCodeCacheSize=512m \
-    --add-opens java.base/java.lang=ALL-UNNAMED \
-    --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
-    --add-opens java.base/java.lang.reflect=ALL-UNNAMED \
-    --add-opens java.base/java.io=ALL-UNNAMED \
-    --add-opens java.base/java.net=ALL-UNNAMED \
-    --add-opens java.base/java.nio=ALL-UNNAMED \
-    --add-opens java.base/java.util=ALL-UNNAMED \
-    --add-opens java.base/java.util.concurrent=ALL-UNNAMED \
-    --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED \
-    --add-opens java.base/sun.nio.ch=ALL-UNNAMED \
-    --add-opens java.base/sun.nio.cs=ALL-UNNAMED \
-    --add-opens java.base/sun.security.action=ALL-UNNAMED \
-    --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
-    -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+  SPARK_GRAFT_CPUS=32 java -Xmx24g "${JVM_FLAGS[@]}" \
     -cp "$CP" graft.tools.TimeQuery "$PROBE_SF" "$PROBE_SET" 2 \
     2>/dev/null > "$1" || echo '{"probe":"FAILED"}' >> "$1"
 }
@@ -59,21 +47,7 @@ for i in $(seq 0 $((N-1))); do
   echo "=== slice $i/$N start $(date -u +%H:%M:%S) ==="
   SPARK_GRAFT_SF_DIR="$SFDIR" SPARK_GRAFT_CPUS=32 \
   SPARK_GRAFT_SLICE="$i/$N" SPARK_GRAFT_PERIODIC_GC=5min \
-  java -Xmx"$MEM" -XX:ReservedCodeCacheSize=512m \
-    --add-opens java.base/java.lang=ALL-UNNAMED \
-    --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
-    --add-opens java.base/java.lang.reflect=ALL-UNNAMED \
-    --add-opens java.base/java.io=ALL-UNNAMED \
-    --add-opens java.base/java.net=ALL-UNNAMED \
-    --add-opens java.base/java.nio=ALL-UNNAMED \
-    --add-opens java.base/java.util=ALL-UNNAMED \
-    --add-opens java.base/java.util.concurrent=ALL-UNNAMED \
-    --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED \
-    --add-opens java.base/sun.nio.ch=ALL-UNNAMED \
-    --add-opens java.base/sun.nio.cs=ALL-UNNAMED \
-    --add-opens java.base/sun.security.action=ALL-UNNAMED \
-    --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
-    -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
+  java -Xmx"$MEM" "${JVM_FLAGS[@]}" \
     -cp "$CP" graft.Bench > bench_line.txt 2> bench_err.log \
     || { echo "slice $i FAILED rc=$?"; tail -40 bench_err.log; touch FAILED; }
   echo "=== slice $i/$N done  $(date -u +%H:%M:%S) ==="

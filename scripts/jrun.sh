@@ -2,24 +2,10 @@
 # Run a graft main class on the compiled classes + /opt/spark/jars WITHOUT
 # sbt (so long-running probes/benches don't hold the sbt project lock).
 # Usage: JRUN_MEM=24g scripts/jrun.sh graft.tools.TimeQuery <args...>
-# Mirrors build.sbt's jdk17AddOpens + code-cache sizing.
+# JVM flags come from scripts/jvm.flags, the list build.sbt also reads.
 set -e
+mapfile -t JVM_FLAGS < <(grep -Ev '^[[:space:]]*(#|$)' "$(dirname "$0")/jvm.flags")
 CLASSES="$(dirname "$0")/../target/scala-2.13/classes"
 CP="$CLASSES:$(ls /opt/spark/jars/*.jar | tr '\n' ':')"
 MEM="${JRUN_MEM:-24g}"
-exec java -Xmx"$MEM" -XX:ReservedCodeCacheSize=512m \
-  --add-opens java.base/java.lang=ALL-UNNAMED \
-  --add-opens java.base/java.lang.invoke=ALL-UNNAMED \
-  --add-opens java.base/java.lang.reflect=ALL-UNNAMED \
-  --add-opens java.base/java.io=ALL-UNNAMED \
-  --add-opens java.base/java.net=ALL-UNNAMED \
-  --add-opens java.base/java.nio=ALL-UNNAMED \
-  --add-opens java.base/java.util=ALL-UNNAMED \
-  --add-opens java.base/java.util.concurrent=ALL-UNNAMED \
-  --add-opens java.base/java.util.concurrent.atomic=ALL-UNNAMED \
-  --add-opens java.base/sun.nio.ch=ALL-UNNAMED \
-  --add-opens java.base/sun.nio.cs=ALL-UNNAMED \
-  --add-opens java.base/sun.security.action=ALL-UNNAMED \
-  --add-opens java.base/sun.util.calendar=ALL-UNNAMED \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -cp "$CP" "$@"
+exec java -Xmx"$MEM" "${JVM_FLAGS[@]}" -cp "$CP" "$@"

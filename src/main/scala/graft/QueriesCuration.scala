@@ -278,8 +278,8 @@ private[graft] object QueriesCuration {
     // gates — the oracle reproduces the query count; the floor is a Spark-
     // side assertion). The synthetic embeddings are near-random (top-10
     // cosines ~0.27-0.33, barely separated — PQ's adversarial case), so
-    // dsub=4 resolution is needed: PqProbe measures mean recall@10
-    // 0.85 / 0.85 / 0.725 at sf0.001 / 0.01 / 0.1 with m=16, ksub=256
+    // dsub=4 resolution is needed: mean recall@10 is 0.85 / 0.85 / 0.725
+    // at sf0.001 / 0.01 / 0.1 with m=16, ksub=256 (NOTES.md)
     QueryDef("q_pq_recall",
       (s, d) => {
         val s2 = s

@@ -1189,7 +1189,7 @@ object Stats {
     val cells = df.na.drop(keys :+ valueCol)
       .groupBy((keys.map(col) :+ x.as("__v")): _*)
       .agg(count(lit(1)).cast("double").as("__c"))
-    // per-key n from cumSumWithTotals' driver-built totals (broadcast
+    // per-key n from cumSumWithTotalsN's driver-built totals (broadcast
     // join) — the previous max().over(partitionBy(keys)) re-shuffled the
     // whole cell frame into #keys partitions (one straggler per key at
     // scale); totals are the same integer-double sums bit-for-bit

@@ -159,25 +159,22 @@ final case class HandyFrame(df: DataFrame, state: HandyState = HandyState()) {
   }
 
   /** `_loc` analog (reference sql/dataframe.py:979-985, same experimental
-    * caveat): rows with row-id in [start, endExclusive). The id assignment
-    * is one zipWithIndex pass; the range filter prunes whole partitions by
-    * their id offsets before touching rows. */
+    * caveat): rows with row-id in [start, endExclusive). A
+    * [[graft.util.PartitionPrefixScan]] in the frame's own partitioning:
+    * pass 1 counts each partition's rows, pass 2 numbers them from the
+    * partition's offset. */
   def loc(start: Long, endExclusive: Long): DataFrame = {
-    val rdd = df.rdd
-    // per-partition counts → id offsets, so out-of-range partitions are
-    // skipped wholesale rather than streamed
-    val counts = rdd.mapPartitionsWithIndex { (pi, it) =>
-      Iterator.single((pi, it.size.toLong))
-    }.collect().sortBy(_._1).map(_._2)
+    val scan = graft.util.PartitionPrefixScan(df)
+    val counts = scan.summarize(_.size.toLong)
     val offsets = counts.scanLeft(0L)(_ + _)
-    val sel = rdd.mapPartitionsWithIndex { (pi, it) =>
-      val base = offsets(pi)
-      if (base >= endExclusive || base + counts(pi) <= start) Iterator.empty
+    // seed = the partition's id range [base, end): out-of-range
+    // partitions are skipped wholesale rather than streamed
+    scan.emit(offsets.zip(offsets.tail), scan.schema) { case ((base, end), it) =>
+      if (base >= endExclusive || end <= start) Iterator.empty
       else it.zipWithIndex.collect {
         case (r, i) if base + i >= start && base + i < endExclusive => r
       }
     }
-    df.sparkSession.createDataFrame(sel, df.schema)
   }
 
   /** Stratify — enter the reference's signature dataflow operator. */

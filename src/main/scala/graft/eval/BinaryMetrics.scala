@@ -1,9 +1,13 @@
 package graft.eval
 
+import graft.util.PartitionPrefixScan
 import org.apache.spark.ml.functions.vector_to_array
 import org.apache.spark.mllib.evaluation.BinaryClassificationMetrics
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 
 /** Binary-classification evaluation (reference extensions/evaluation.py).
   *
@@ -33,69 +37,52 @@ object BinaryMetrics {
   }
 
   /** Shared distributed-cumulative scaffolding: per-score (pos, neg)
-    * counts range-sorted by descending score, plus the per-partition
-    * cumulative offsets (so partition k can start its running tp/fp at the
-    * exact totals of partitions 0..k-1) and the grand totals P and N. One
-    * sort shuffle, reused by both the offsets pass and the caller's pass. */
+    * counts as a [[PartitionPrefixScan]] in descending score order, plus
+    * each partition's starting (tp, fp) — the totals of all earlier
+    * partitions — and the grand totals P and N. */
   private def cumScaffold(df: DataFrame, scoreCol: String, labelCol: String)
-      : (org.apache.spark.rdd.RDD[org.apache.spark.sql.catalyst.InternalRow],
-         Array[Double], Array[Double], Double, Double) = {
-    val spark = df.sparkSession
-    val sl = scoreAndLabels(df, scoreCol, labelCol)
-    val perScore = sl.groupBy(col("score")).agg(
-      sum(col("label")).cast("double").as("pos"),
-      (count(lit(1)) - sum(col("label"))).cast("double").as("neg"))
-    val np = spark.sessionState.conf.numShufflePartitions
-    val sorted = perScore
-      .repartitionByRange(np, col("score").desc)
-      .sortWithinPartitions(col("score").desc)
-    // InternalRow on both passes — all three columns are doubles, and the
-    // .rdd path boxed every distinct score twice (the RangeCum rewrite's
-    // measured serialization tax); one val: both passes reuse the shuffle
-    val rdd = sorted.queryExecution.toRdd
-    val partTotals = rdd.mapPartitionsWithIndex { (pi, it) =>
+      : (PartitionPrefixScan, Array[(Double, Double)], Double, Double) = {
+    val perScore = scoreAndLabels(df, scoreCol, labelCol)
+      .groupBy(col("score")).agg(
+        sum(col("label")).cast("double").as("pos"),
+        (count(lit(1)) - sum(col("label"))).cast("double").as("neg"))
+    val scan = PartitionPrefixScan.sorted(perScore, col("score").desc)
+    val partTotals = scan.summarize { it =>
       var pos = 0.0; var neg = 0.0
       it.foreach { r => pos += r.getDouble(1); neg += r.getDouble(2) }
-      Iterator.single((pi, (pos, neg)))
-    }.collect().sortBy(_._1).map(_._2)
+      (pos, neg)
+    }
     val posOff = partTotals.map(_._1).scanLeft(0.0)(_ + _)
     val negOff = partTotals.map(_._2).scanLeft(0.0)(_ + _)
-    (rdd, posOff, negOff, posOff.last, negOff.last)
+    (scan, posOff.zip(negOff), posOff.last, negOff.last)
   }
+
+  private val curveSchema = StructType(
+    Seq("threshold", "tp", "fp").map(StructField(_, DoubleType)))
 
   /** Per-threshold confusion counts: threshold, tp, fp, fn, tn, plus
     * fpr / recall(tpr) / precision. Thresholds are the distinct scores,
     * descending (mllib semantics: predict positive when score >= t). */
   def curveData(df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
-    val spark = df.sparkSession
-    val (rdd, posOff, negOff, p, n) = cumScaffold(df, scoreCol, labelCol)
-    val cum = rdd.mapPartitionsWithIndex { (pi, it) =>
-      var tp = posOff(pi)
-      var fp = negOff(pi)
+    val (scan, offsets, p, n) = cumScaffold(df, scoreCol, labelCol)
+    val cum = scan.emit(offsets, curveSchema) { case ((tp0, fp0), it) =>
+      var tp = tp0
+      var fp = fp0
       it.map { r =>
         tp += r.getDouble(1)
         fp += r.getDouble(2)
-        val o = new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(3)
+        val o = new GenericInternalRow(3)
         o.update(0, r.getDouble(0)); o.update(1, tp); o.update(2, fp)
-        o: org.apache.spark.sql.catalyst.InternalRow
+        o: InternalRow
       }
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("threshold",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("tp",
-        org.apache.spark.sql.types.DoubleType),
-      org.apache.spark.sql.types.StructField("fp",
-        org.apache.spark.sql.types.DoubleType)))
     // p / n are driver-side constants; a zero class count would be an ANSI
     // DIVIDE_BY_ZERO at runtime, so degrade to NaN here (mllib's curves are
     // equally undefined there). precision is safe: every distinct score has
     // >= 1 row, so tp + fp >= 1 at every curve point.
     val fprE = if (n == 0) lit(Double.NaN) else col("fp") / lit(n)
     val recE = if (p == 0) lit(Double.NaN) else col("tp") / lit(p)
-    org.apache.spark.sql.graft.InternalRows.toDF(spark, cum, schema)
-      .select(col("threshold"), col("tp"), col("fp"),
+    cum.select(col("threshold"), col("tp"), col("fp"),
         (lit(p) - col("tp")).as("fn"),
         (lit(n) - col("fp")).as("tn"),
         fprE.as("fpr"), recE.as("recall"),
@@ -215,10 +202,10 @@ object BinaryMetrics {
   def auc(df: DataFrame, scoreCol: String, labelCol: String): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val (rdd, posOff, negOff, p, n) = cumScaffold(df, scoreCol, labelCol)
-    val partials = rdd.mapPartitionsWithIndex { (pi, it) =>
-      var tp = posOff(pi)
-      var fp = negOff(pi)
+    val (scan, offsets, p, n) = cumScaffold(df, scoreCol, labelCol)
+    val partials = scan.fold(offsets) { case ((tpStart, fpStart), it) =>
+      var tp = tpStart
+      var fp = fpStart
       var rocArea = 0.0
       var prArea = 0.0
       it.foreach { r =>
@@ -232,12 +219,12 @@ object BinaryMetrics {
         val prec0 = if (tp0 + fp0 == 0) prec else tp0 / (tp0 + fp0)
         prArea += (tp - tp0) / p * (prec + prec0) / 2
       }
-      Iterator.single((pi, rocArea, prArea))
-    }.collect().sortBy(_._1)
+      (rocArea, prArea)
+    }
     // no positives (or no rows): both areas are undefined — NaN, not a
     // misleading 0.0 (rocArea/(p·n) is already NaN via 0/0)
-    val prAuc = if (p == 0) Double.NaN else partials.map(_._3).sum
-    Seq((partials.map(_._2).sum / (p * n), prAuc))
+    val prAuc = if (p == 0) Double.NaN else partials.map(_._2).sum
+    Seq((partials.map(_._1).sum / (p * n), prAuc))
       .toDF("auc_roc", "auc_pr")
   }
 
@@ -525,11 +512,11 @@ object BinaryMetrics {
     * A label is positive when != 0.
     *
     * Scale shape: global ranking WITHOUT a single-partition window —
-    * one range-sort shuffle on (score desc, tie), then per-partition
-    * offset ranks (the zipfFit scaffold): pass 1 counts partition
-    * sizes, pass 2 folds each partition's rows into its ≤ nBuckets
-    * local (n, pos) cells. Driver merges ≤ partitions·nBuckets cells;
-    * corpus rows never leave their partition after the sort. */
+    * a [[PartitionPrefixScan]] on (score desc, tie): pass 1 counts
+    * partition sizes, pass 2 folds each partition's rows, ranked from
+    * its offset, into its ≤ nBuckets local (n, pos) cells. Driver merges
+    * ≤ partitions·nBuckets cells; corpus rows never leave their
+    * partition after the sort. */
   def liftTable(df: DataFrame, scoreCol: String, labelCol: String,
                 tieCol: String, nBuckets: Int = 10): DataFrame = {
     require(nBuckets >= 1, s"liftTable: nBuckets must be >= 1, got $nBuckets")
@@ -539,34 +526,23 @@ object BinaryMetrics {
         when(col(labelCol).cast("double") =!= 0.0, 1L).otherwise(0L)
           .as("__y"),
         col(tieCol).cast("long").as("__t"))
-    val np = spark.sessionState.conf.numShufflePartitions
-    val sorted = base
-      .repartitionByRange(np, col("__s").desc, col("__t"))
-      .sortWithinPartitions(col("__s").desc, col("__t"))
-    // InternalRow on both passes (columns are double/long primitives;
-    // nothing here outlives one iterator step)
-    val rdd = sorted.queryExecution.toRdd // both passes reuse the one sort shuffle
-    val counts = rdd.mapPartitionsWithIndex { (pi, it) =>
-      var n = 0L
-      while (it.hasNext) { it.next(); n += 1 }
-      Iterator.single((pi, n))
-    }.collect().sortBy(_._1).map(_._2)
+    val scan = PartitionPrefixScan.sorted(base, col("__s").desc, col("__t"))
+    val counts = scan.summarize(_.size.toLong)
     val offsets = counts.scanLeft(0L)(_ + _)
     val total = offsets.last
     val b = nBuckets.toLong
-    val cells = rdd.mapPartitionsWithIndex { (pi, it) =>
+    val cells = scan.fold(offsets) { (rk0, it) =>
       val n = new Array[Long](nBuckets)
       val pos = new Array[Long](nBuckets)
-      var rk = offsets(pi)
+      var rk = rk0
       it.foreach { r =>
         val bi = if (total == 0) 0 else ((rk * b) / total).toInt
         rk += 1
         n(bi) += 1
         pos(bi) += r.getLong(1)
       }
-      (0 until nBuckets).iterator.filter(n(_) > 0)
-        .map(i => (i, n(i), pos(i)))
-    }.collect()
+      (0 until nBuckets).filter(n(_) > 0).map(i => (i, n(i), pos(i)))
+    }.flatten
     val n = new Array[Long](nBuckets)
     val pos = new Array[Long](nBuckets)
     cells.foreach { case (i, cn, cp) => n(i) += cn; pos(i) += cp }

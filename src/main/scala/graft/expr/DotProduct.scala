@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Dot product of two double-array columns as a NATIVE codegen'd Catalyst

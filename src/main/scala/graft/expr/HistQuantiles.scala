@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 import graft.agg.CountHist

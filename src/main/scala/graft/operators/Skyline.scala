@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.util.PartitionPrefixScan
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -14,13 +15,12 @@ import org.apache.spark.sql.functions._
   * x first — within equal x only the max-y rows can survive — then
   * sweep distinct x DESCENDING keeping groups whose max-y strictly
   * exceeds every higher-x group's max-y. The sweep is a prefix-max,
-  * which distributes exactly like [[graft.eval.BinaryMetrics.liftTable]]'s
-  * ranking: range-sort the distinct-x frame, pass 1 collects per-
-  * partition maxima (driver computes each partition's EXCLUSIVE prefix
-  * max — one tiny array), pass 2 sweeps each partition independently
-  * seeded with its prefix. No single-partition window anywhere; the
-  * full-row frame is touched only by one hash aggregate and one
-  * semi-join of the (small) frontier frame.
+  * a [[PartitionPrefixScan]] over the distinct-x frame: pass 1 collects
+  * per-partition maxima (driver computes each partition's EXCLUSIVE
+  * prefix max — one tiny array), pass 2 sweeps each partition
+  * independently seeded with its prefix. No single-partition window
+  * anywhere; the full-row frame is touched only by one hash aggregate
+  * and one semi-join of the (small) frontier frame.
   *
   * To minimize a criterion, negate it on the way in. Output: the
   * input's surviving rows, original schema.
@@ -28,41 +28,30 @@ import org.apache.spark.sql.functions._
 object Skyline {
 
   def skyline2d(df: DataFrame, xCol: String, yCol: String): DataFrame = {
-    val spark = df.sparkSession
     val base = df.na.drop(Seq(xCol, yCol))
     val dx = base.groupBy(col(xCol).as("__sx"))
       .agg(max(col(yCol)).as("__sy"))
-    val np = spark.sessionState.conf.numShufflePartitions
-    val sorted = dx.repartitionByRange(np, col("__sx").desc)
-      .sortWithinPartitions(col("__sx").desc)
-    // InternalRow on both passes; pass 2 re-emits the (reused) sorted row
-    // itself — safe: the planned RDDScanExec unsafe-projects each row
-    // before anything downstream buffers it
-    val rdd = sorted.queryExecution.toRdd // both passes reuse the one sort shuffle
-    val yGet = numGetter(sorted.schema(1).dataType)
-    // pass 1: per-partition max of __sy (null-safe: empty partitions)
-    val partMax = rdd.mapPartitionsWithIndex { (pi, it) =>
+    val scan = PartitionPrefixScan.sorted(dx, col("__sx").desc)
+    val yGet = numGetter(scan.schema(1).dataType)
+    // pass 1: per-partition max of __sy (-inf for an empty partition)
+    val partMax = scan.summarize { it =>
       var m = Double.NegativeInfinity
-      var any = false
-      it.foreach { r =>
-        val y = yGet(r); if (y > m) m = y; any = true
-      }
-      Iterator.single((pi, if (any) m else Double.NegativeInfinity))
-    }.collect().sortBy(_._1).map(_._2)
+      it.foreach { r => val y = yGet(r); if (y > m) m = y }
+      m
+    }
     // exclusive prefix max per partition: the best y of all STRICTLY
     // higher-x partitions (sort is descending, so all earlier ones)
     val prefix = partMax.scanLeft(Double.NegativeInfinity)(math.max)
     // pass 2: independent per-partition sweep seeded with the prefix
-    val survivors = rdd.mapPartitionsWithIndex { (pi, it) =>
-      var best = prefix(pi)
-      it.flatMap { r =>
+    val frontier = scan.emit(prefix, scan.schema) { (best0, it) =>
+      var best = best0
+      it.filter { r =>
         val y = yGet(r)
-        if (y > best) { best = y; Iterator.single(r) }
-        else Iterator.empty
+        val keep = y > best
+        if (keep) best = y
+        keep
       }
     }
-    val frontier = org.apache.spark.sql.graft.InternalRows
-      .toDF(spark, survivors, sorted.schema)
     // keep every input row sitting ON the frontier (duplicates survive);
     // the frontier frame is small — AQE broadcasts it
     base.join(frontier,

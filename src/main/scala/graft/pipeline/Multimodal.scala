@@ -104,17 +104,21 @@ object Multimodal {
     * measured a 7 s steady floor with 10× outlier runs (encoder lock /
     * allocation churn), all for 50 distinct byte arrays (guide §4.5 —
     * amortize heavyweight per-row state across the partition). Bounded:
-    * past `MaxPngMemo` entries new seeds fall back to a direct encode,
-    * so an unbounded-seed caller cannot grow the map. The cached array
-    * is shared across rows — safe, callers never mutate payloads and
-    * Spark copies it into the row on write. */
-  private val MaxPngMemo = 4096
+    * once the memo holds `MaxPngMemo` entries, seeds not in it fall back
+    * to a direct encode (seeds already in it still hit), so an
+    * unbounded-seed caller cannot grow the map. The cached array is
+    * shared across rows — safe, callers never mutate payloads and Spark
+    * copies it into the row on write. */
+  private[pipeline] val MaxPngMemo = 4096
   private val pngMemo =
     new java.util.concurrent.ConcurrentHashMap[(Long, Int, Int), Array[Byte]]()
-  def syntheticPngMemo(seed: Long, w: Int = 8, h: Int = 4): Array[Byte] =
-    if (pngMemo.size >= MaxPngMemo) syntheticPng(seed, w, h)
-    else pngMemo.computeIfAbsent((seed, w, h),
-      _ => syntheticPng(seed, w, h))
+  def syntheticPngMemo(seed: Long, w: Int = 8, h: Int = 4): Array[Byte] = {
+    val key = (seed, w, h)
+    val hit = pngMemo.get(key)
+    if (hit != null) hit
+    else if (pngMemo.size >= MaxPngMemo) syntheticPng(seed, w, h)
+    else pngMemo.computeIfAbsent(key, _ => syntheticPng(seed, w, h))
+  }
 
   /** metadata struct carried next to every payload */
   val MetadataType: StructType = StructType(Seq(

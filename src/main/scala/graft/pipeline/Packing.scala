@@ -1,6 +1,9 @@
 package graft.pipeline
 
+import graft.util.PartitionPrefixScan
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -21,9 +24,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *    `partition << 40 | local` and the per-partition tail waste is
   *    amortized to nothing when partitions hold ≫ budget tokens.
   *
-  * The prefix sum in chunkedPack uses the engine's standard
-  * range-sort + per-partition-offset scaffold (one sort shuffle, a
-  * #partitions-sized collect, one streaming pass) — never an
+  * The prefix sum in chunkedPack is a [[PartitionPrefixScan]] (one sort
+  * shuffle, a #partitions-sized collect, one streaming pass) — never an
   * unpartitioned window. */
 object Packing {
 
@@ -41,41 +43,32 @@ object Packing {
   def chunkedPack(df: DataFrame, idCol: String, tokensCol: String,
                   budget: Long): DataFrame = {
     require(budget > 0, s"budget must be positive, got $budget")
-    val spark = df.sparkSession
-    val np = spark.sessionState.conf.numShufflePartitions
     val src = df.select(col(idCol).cast("long").as("id"),
         col(tokensCol).cast("long").as("tokens"))
       .na.drop(Seq("id", "tokens"))
-    val sorted = src.repartitionByRange(np, col("id"))
-      .sortWithinPartitions("id")
-    // InternalRow on both passes (two long columns in, five out — no
-    // boxed Row decode/re-encode)
-    val rdd = sorted.queryExecution.toRdd // both passes reuse the one sort shuffle
-    val totals = rdd.mapPartitionsWithIndex { (pi, it) =>
+    val scan = PartitionPrefixScan.sorted(src, col("id"))
+    val totals = scan.summarize { it =>
       var s = 0L
       it.foreach { r =>
         val t = r.getLong(1)
         require(t >= 0, s"negative token count $t")
         s += t
       }
-      Iterator.single((pi, s))
-    }.collect().sortBy(_._1).map(_._2)
-    val off = totals.scanLeft(0L)(_ + _)
-    val rows = rdd.mapPartitionsWithIndex { (pi, it) =>
-      var start = off(pi)
+      s
+    }
+    scan.emit(totals.scanLeft(0L)(_ + _), packSchema) { (start0, it) =>
+      var start = start0
       it.map { r =>
         val t = r.getLong(1)
         val s = start
         start += t
-        val o = new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(5)
+        val o = new GenericInternalRow(5)
         o.update(0, r.getLong(0)); o.update(1, t); o.update(2, s)
         o.update(3, s / budget)
         o.update(4, (s + math.max(t, 1L) - 1L) / budget)
-        o: org.apache.spark.sql.catalyst.InternalRow
+        o: InternalRow
       }
     }
-    org.apache.spark.sql.graft.InternalRows.toDF(spark, rows, packSchema)
       .withColumnRenamed("id", idCol)
   }
 

@@ -1,7 +1,11 @@
 package graft.pipeline
 
+import graft.util.PartitionPrefixScan
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Reproducible sampling for training-data pipelines. `df.sample()` is
   * seed-stable only for a FIXED partitioning — repartition the input (or
@@ -426,14 +430,14 @@ object Sampling {
     * running token total in (score desc, id) order; exactly the rows
     * with `cum_tokens <= budget`.
     *
-    * Scale shape: ONE range-sort shuffle on (score desc, id), then the
-    * engine's partition-offset scaffold — per-partition token sums
-    * (#partitions longs to the driver), prefix offsets broadcast back,
-    * and each partition emits its rows with exact global cumulative
-    * counts. No global window, no single-partition sort: partitions
-    * whose entire range clears the budget stream straight through, and
-    * the sort shuffle is reused by both passes (skipped-stage replay),
-    * so 100 TB costs one sort plus two linear scans. Token counts are
+    * Scale shape: a [[PartitionPrefixScan]] on (score desc, id) —
+    * per-partition token sums (#partitions longs to the driver), prefix
+    * offsets broadcast back, and each partition emits its rows with
+    * exact global cumulative counts. No global window, no
+    * single-partition sort: partitions whose entire range clears the
+    * budget stream straight through, and the sort shuffle is reused by
+    * both passes (skipped-stage replay), so 100 TB costs one sort plus
+    * two linear scans. Token counts are
     * expected non-negative (counts); `cum_tokens` is then non-decreasing
     * and the filter is a true prefix. */
   def tokenBudgetSelect(df: DataFrame, idCol: String, scoreCol: String,
@@ -441,49 +445,35 @@ object Sampling {
     require(budget >= 0, s"tokenBudgetSelect needs budget >= 0, got $budget")
     graft.util.Errors.context("tokenBudgetSelect",
         Seq(idCol, scoreCol, tokenCol)) {
-    val spark = df.sparkSession
     // cast FIRST, then drop on the cast column too (the chunkedPack
     // convention): a cast-produced null (malformed token value under
     // non-ANSI cast) would otherwise reach getLong as a silent 0
     val src = df.na.drop(Seq(idCol, scoreCol, tokenCol))
       .withColumn("__graft_tok", col(tokenCol).cast("long"))
       .na.drop(Seq("__graft_tok"))
-    val np = spark.sessionState.conf.numShufflePartitions
-    val sorted = src.repartitionByRange(np, col(scoreCol).desc, col(idCol))
-      .sortWithinPartitions(col(scoreCol).desc, col(idCol))
-    val schema = sorted.schema
-    val tokIdx = schema.fieldIndex("__graft_tok")
-    // InternalRow on both passes; pass 2 appends cum_tokens via one
-    // mutated JoinedRow per partition (safe: the planned RDDScanExec
-    // unsafe-projects each row before anything downstream buffers it)
-    val rdd = sorted.queryExecution.toRdd
-    val sums = rdd.mapPartitionsWithIndex { (pi, it) =>
+    val scan = PartitionPrefixScan.sorted(src, col(scoreCol).desc, col(idCol))
+    val tokIdx = scan.schema.fieldIndex("__graft_tok")
+    val sums = scan.summarize { it =>
       var s = 0L
       it.foreach(r => s += r.getLong(tokIdx))
-      Iterator.single((pi, s))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = sums.scanLeft(0L)(_ + _)
-    val out = rdd.mapPartitionsWithIndex { (pi, it) =>
-      var cum = offsets(pi)
-      val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
+      s
+    }
+    val outSchema = scan.schema.add("cum_tokens", LongType, nullable = false)
+    scan.emit(sums.scanLeft(0L)(_ + _), outSchema) { (cum0, it) =>
+      var cum = cum0
+      val joined = new JoinedRow
       // filter (not takeWhile): keeps the output the exact window-sum
       // predicate `cum <= budget` for ANY input, matching the SQL oracle
       // even if a caller feeds a pathological negative token count
       it.flatMap { r =>
         cum += r.getLong(tokIdx)
         if (cum <= budget) {
-          val c = new org.apache.spark.sql.catalyst.expressions
-            .GenericInternalRow(1)
+          val c = new GenericInternalRow(1)
           c.update(0, cum)
-          Iterator.single(
-            joined(r, c): org.apache.spark.sql.catalyst.InternalRow)
+          Iterator.single(joined(r, c): InternalRow)
         } else Iterator.empty
       }
     }
-    org.apache.spark.sql.graft.InternalRows.toDF(spark, out,
-        org.apache.spark.sql.types.StructType(
-        schema.fields :+ org.apache.spark.sql.types.StructField(
-          "cum_tokens", org.apache.spark.sql.types.LongType, nullable = false)))
       .drop("__graft_tok")
   } }
 

@@ -1,7 +1,11 @@
 package graft.pipeline
 
+import graft.util.PartitionPrefixScan
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Text-analysis operators for large-scale training-data pipelines:
   * token counting, quality scoring, language ID, fingerprinting. Everything
@@ -227,30 +231,18 @@ object TextAnalysis {
     * (slope, intercept, r2, n_types).
     *
     * Scale shape: vocabulary aggregate (token-keyed, map-side combined),
-    * then the engine's standard range-sort + partition-offset scaffold
-    * assigns ranks WITHOUT a global window, and each partition folds its
-    * regression co-moments locally — #partitions small vectors reach the
-    * driver. */
+    * then a [[PartitionPrefixScan]] assigns ranks WITHOUT a global
+    * window, and each partition folds its regression co-moments locally
+    * — #partitions small vectors reach the driver. */
   def zipfFit(df: DataFrame, idCol: String, textCol: String,
               minCount: Long = 1L): DataFrame = {
     val spark = df.sparkSession
     val vocab = vocabulary(df, idCol, textCol, minCount)
       .select(col("count").cast("long").as("c"), col("token"))
-    val np = spark.sessionState.conf.numShufflePartitions
-    val sorted = vocab
-      .repartitionByRange(np, col("c").desc, col("token"))
-      .sortWithinPartitions(col("c").desc, col("token"))
-    // InternalRow on both passes: the vocab rows are read-only primitive
-    // longs here, and .rdd boxed every (count, token) pair twice
-    val rdd = sorted.queryExecution.toRdd // both passes reuse the one sort shuffle
-    val counts = rdd.mapPartitionsWithIndex { (pi, it) =>
-      var n = 0L
-      while (it.hasNext) { it.next(); n += 1 }
-      Iterator.single((pi, n))
-    }.collect().sortBy(_._1).map(_._2)
-    val offsets = counts.scanLeft(0L)(_ + _)
-    val partials = rdd.mapPartitionsWithIndex { (pi, it) =>
-      var rk = offsets(pi)
+    val scan = PartitionPrefixScan.sorted(vocab, col("c").desc, col("token"))
+    val counts = scan.summarize(_.size.toLong)
+    val partials = scan.fold(counts.scanLeft(0L)(_ + _)) { (rk0, it) =>
+      var rk = rk0
       var n = 0L; var sx = 0.0; var sy = 0.0
       var sxy = 0.0; var sxx = 0.0; var syy = 0.0
       it.foreach { r =>
@@ -259,11 +251,11 @@ object TextAnalysis {
         val y = math.log(r.getLong(0).toDouble)
         n += 1; sx += x; sy += y; sxy += x * y; sxx += x * x; syy += y * y
       }
-      Iterator.single((pi, n, sx, sy, sxy, sxx, syy))
-    }.collect().sortBy(_._1)
+      (n, sx, sy, sxy, sxx, syy)
+    }
     var n = 0L; var sx = 0.0; var sy = 0.0
     var sxy = 0.0; var sxx = 0.0; var syy = 0.0
-    partials.foreach { case (_, pn, px, py, pxy, pxx, pyy) =>
+    partials.foreach { case (pn, px, py, pxy, pxx, pyy) =>
       n += pn; sx += px; sy += py; sxy += pxy; sxx += pxx; syy += pyy
     }
     val nd = n.toDouble
@@ -277,6 +269,10 @@ object TextAnalysis {
     Seq((slope, intercept, r2, n)).toDF("slope", "intercept", "r2", "n_types")
   }
 
+  private val vocabGrowthSchema = StructType(
+    Seq("doc_id", "doc_tokens", "cum_tokens", "new_types", "cum_types")
+      .map(StructField(_, LongType, nullable = false)))
+
   /** Vocabulary growth curve: for each document (in `idCol` order) the
     * cumulative token count and cumulative distinct-type count after
     * ingesting that document — the empirical curve behind Heaps' law,
@@ -288,12 +284,10 @@ object TextAnalysis {
     * Scale shape: NO global window and NO per-token ordering — types are
     * attributed to their first document with a min(doc_id) aggregate
     * (token-keyed, map-side combined), collapsed to per-doc new-type
-    * counts, and both running sums ride the engine's standard range-sort
-    * + partition-offset scaffold in ONE pass (two counters per
-    * partition). The sort is doc-cardinality, not token-cardinality. */
+    * counts, and both running sums ride one [[PartitionPrefixScan]]
+    * (two counters per partition). The sort is doc-cardinality, not token-cardinality. */
   def vocabGrowth(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     graft.util.Errors.context("vocabGrowth", Seq(idCol, textCol)) {
-    val spark = df.sparkSession
     val tok = df.na.drop(Seq(idCol, textCol))
       .select(col(idCol).cast("long").as("__graft_id"),
         explode(tokens(col(textCol))).as("__graft_token"))
@@ -310,42 +304,24 @@ object TextAnalysis {
     val joined = perDoc.join(newTypes, Seq("__graft_id"), "left")
       .select(col("__graft_id"), col("doc_tokens"),
         coalesce(col("new_types"), lit(0L)).as("new_types"))
-    val np = spark.sessionState.conf.numShufflePartitions
-    val sorted = joined.repartitionByRange(np, col("__graft_id"))
-      .sortWithinPartitions(col("__graft_id"))
-    // InternalRow on both passes (all-long columns, fresh 5-long output
-    // rows — no boxed Row decode/re-encode)
-    val rdd = sorted.queryExecution.toRdd
-    val partials = rdd.mapPartitionsWithIndex { (pi, it) =>
+    val scan = PartitionPrefixScan.sorted(joined, col("__graft_id"))
+    val partials = scan.summarize { it =>
       var t = 0L; var y = 0L
       it.foreach { r => t += r.getLong(1); y += r.getLong(2) }
-      Iterator.single((pi, t, y))
-    }.collect().sortBy(_._1)
-    val tokOff = partials.map(_._2).scanLeft(0L)(_ + _)
-    val typOff = partials.map(_._3).scanLeft(0L)(_ + _)
-    val out = rdd.mapPartitionsWithIndex { (pi, it) =>
-      var ct = tokOff(pi); var cy = typOff(pi)
+      (t, y)
+    }
+    val tokOff = partials.map(_._1).scanLeft(0L)(_ + _)
+    val typOff = partials.map(_._2).scanLeft(0L)(_ + _)
+    scan.emit(tokOff.zip(typOff), vocabGrowthSchema) { case ((t0, y0), it) =>
+      var ct = t0; var cy = y0
       it.map { r =>
         ct += r.getLong(1); cy += r.getLong(2)
-        val o = new org.apache.spark.sql.catalyst.expressions
-          .GenericInternalRow(5)
+        val o = new GenericInternalRow(5)
         o.update(0, r.getLong(0)); o.update(1, r.getLong(1)); o.update(2, ct)
         o.update(3, r.getLong(2)); o.update(4, cy)
-        o: org.apache.spark.sql.catalyst.InternalRow
+        o: InternalRow
       }
     }
-    org.apache.spark.sql.graft.InternalRows.toDF(spark, out,
-      org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("doc_tokens",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("cum_tokens",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("new_types",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("cum_types",
-        org.apache.spark.sql.types.LongType, nullable = false))))
   } }
 
   /** Heaps'-law fit over the [[vocabGrowth]] curve: least squares of
@@ -388,10 +364,8 @@ object TextAnalysis {
     // one parquet split would hash on one core. Spread doc rows first
     // when the input is under-partitioned (cheap: doc-count rows move
     // once); a no-op at scale, where the scan already has >=
-    // shuffle-partition splits. (Stage costs at sf0.1: tools/
-    // HashEmbedProbe — explode 0.2 s, +md5 0.35 s, +conv 0.43 s, +agg
-    // 0.63 s, full 1.1 s; the q_hash_embed bench row pays ~2x that for
-    // its output orderBy's range-sampling pass.)
+    // shuffle-partition splits. (Stage costs at sf0.1: NOTES.md,
+    // "q_hash_embed cost anatomy".)
     val np = df.sparkSession.sessionState.conf.numShufflePartitions
     val spread = if (clean.rdd.getNumPartitions < math.max(2, np / 2))
       clean.repartition(np) else clean

@@ -98,7 +98,7 @@ object GraftExtensions {
     * (`SELECT graft_quality(text) FROM docs`). */
   val columnFunctionDescriptors: Seq[(FunctionIdentifier, ExpressionInfo,
       Seq[Expression] => Expression)] = {
-    import org.apache.spark.sql.graftbridge.Bridge
+    import org.apache.spark.sql.graft.Bridge
     def oneArg(name: String, f: org.apache.spark.sql.Column => org.apache.spark.sql.Column) = (
       FunctionIdentifier(name),
       new ExpressionInfo(GraftExtensions.getClass.getName, name),
@@ -168,7 +168,7 @@ object GraftExtensions {
     new ExpressionInfo(classOf[graft.expr.DotProduct].getName, "graft_cosine"),
     (exprs: Seq[Expression]) => {
       require(exprs.length == 2, "usage: graft_cosine(array_col, array_col)")
-      import org.apache.spark.sql.graftbridge.Bridge
+      import org.apache.spark.sql.graft.Bridge
       Bridge.resolvedExpression(graft.pipeline.Dedup.cosine(
         Bridge.column(exprs.head), Bridge.column(exprs(1))))
     })

@@ -224,7 +224,7 @@ object InferenceTests {
     val cells = df.filter(x.isNotNull && col(groupCol).isNotNull)
       .groupBy(col(groupCol).as("__bf_g"), x.as("__v"))
       .agg(count(lit(1)).cast("double").as("__c"))
-    // per-group n comes from cumSumWithTotals' driver-built totals frame
+    // per-group n comes from cumSumWithTotalsN's driver-built totals frame
     // (broadcast join) — the previous max().over(partitionBy(group))
     // re-shuffled the ENTIRE cell frame into k partitions (k ≈ groups),
     // a one-straggler-per-group wall at scale; the totals are the same

@@ -1,5 +1,6 @@
 package graft.stat
 
+import graft.util.PartitionPrefixScan
 import org.apache.commons.math3.distribution._
 import org.apache.commons.math3.stat.descriptive.StatisticalSummaryValues
 import org.apache.commons.math3.stat.inference.TTest
@@ -179,32 +180,19 @@ object StatTests {
     val rds = dists.map { case (label, name, params) =>
       label -> distributionFor(name, params)
     }
-    // Tungsten range-partition + in-partition radix sort (compact UnsafeRow
-    // shuffle) — RDD sortBy would shuffle Java-serialized boxed Doubles.
-    // Partition i holds range i, so partition-major order IS sorted order.
-    val spark = df.sparkSession
-    import spark.implicits._
-    val np = spark.sessionState.conf.numShufflePartitions
-    val sorted = df.select(col(c).cast("double").as("v")).na.drop()
-      .repartitionByRange(np, col("v")).sortWithinPartitions("v")
-      .as[Double].rdd
-    // pass 1: per-partition counts → global rank offsets (replaces
-    // zipWithIndex, whose internal count pass + materialized (v, i) tuples
-    // and the cache were half the cost); pass 2 reuses the sort's shuffle
-    // files, so the exchange runs once.
-    val partCounts = sorted
-      .mapPartitionsWithIndex { (pi, it) =>
-        var cnt = 0L
-        while (it.hasNext) { it.next(); cnt += 1 }
-        Iterator.single((pi, cnt))
-      }.collect().sortBy(_._1).map(_._2)
+    // pass 1 counts give the global rank offsets — no RDD sortBy (it
+    // shuffles Java-serialized boxed Doubles) and no zipWithIndex (an
+    // extra count pass plus materialized (v, i) tuples)
+    val scan = PartitionPrefixScan.sorted(
+      df.select(col(c).cast("double").as("v")).na.drop(), col("v"))
+    val partCounts = scan.summarize(_.size.toLong)
     val n = partCounts.sum.toDouble
-    val offsets = partCounts.scanLeft(0L)(_ + _)
     // per element: D = max(|cdf − i/n|, |cdf − (i+1)/n|); fold max per dist
-    val sups = sorted.mapPartitionsWithIndex { (pi, it) =>
+    val sups = scan.fold(partCounts.scanLeft(0L)(_ + _)) { (i0, it) =>
       val acc = Array.fill(rds.size)(0.0)
-      var i = offsets(pi)
-      it.foreach { v =>
+      var i = i0
+      it.foreach { r =>
+        val v = r.getDouble(0)
         var d = 0
         while (d < rds.size) {
           val cdf = rds(d)._2.cumulativeProbability(v)
@@ -216,7 +204,7 @@ object StatTests {
         }
         i += 1
       }
-      Iterator.single(acc)
+      acc
     }.reduce { (a, b) =>
       Array.tabulate(a.length)(i => math.max(a(i), b(i)))
     }

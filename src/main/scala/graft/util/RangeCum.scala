@@ -1,40 +1,27 @@
 package graft.util
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.InternalRows
+import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types._
 
 /** Distributed cumulative sums over a value-ordered frame WITHOUT an
-  * unpartitioned window — the range-sort + partition-offset scaffold
-  * (the BinaryMetrics.cumScaffold / ksTestMulti shape) generalized to
-  * arbitrary (keys…, order, sum-columns) frames so the distinct-value
-  * cumulative family (Mann-Whitney mid-ranks, conformal order
-  * statistics, ECDF sweeps) stops funneling through one partition when
-  * the value column is continuous (distinct ≈ n).
+  * unpartitioned window, for arbitrary (keys…, order, sum-columns)
+  * frames, so the distinct-value cumulative family (Mann-Whitney
+  * mid-ranks, conformal order statistics, ECDF sweeps) stops funneling
+  * through one partition when the value column is continuous
+  * (distinct ≈ n).
   *
-  * Shape: range-partition by (keys…, order), sort within partitions
-  * (Tungsten radix sort, compact UnsafeRow shuffle), fold ONE
-  * per-(partition, key) subtotal pass to the driver (O(#partitions +
-  * #keys) rows — the guard refuses beyond `maxDriverEntries`), scan the
-  * running offsets driver-side, then a second pass over the SAME sort
-  * shuffle emits every row with its running sums. Wall-clock is two
-  * passes over shuffle files written once; memory is one row plus the
-  * offset map everywhere.
-  *
-  * Both passes stay on `queryExecution.toRdd` (InternalRow): the `.rdd`
-  * formulation deserialized every sorted row into a boxed GenericRow on
-  * BOTH passes and re-encoded pass 2's output through the interpreted
-  * `createDataFrame(RDD[Row])` converter — measured ~1.4× slower for a
-  * doubles projection (see corrSpearman's decode note). The sorted
-  * iterator reuses its UnsafeRow buffer, so key values are copied
-  * (`InternalRow.copyValue`) before they outlive one `next()`: map
-  * inserts in pass 1, the current-group key in pass 2. Pass 2 emits one
-  * mutated JoinedRow per partition — safe because the planned
-  * RDDScanExec unsafe-projects every row before anything downstream
-  * can buffer it.
+  * Shape: a [[PartitionPrefixScan]] over (keys…, order). Pass 1 folds
+  * per-(partition, key) subtotals (O(#partitions + #keys) entries — the
+  * guard refuses beyond `maxDriverEntries`), the driver scans them into
+  * each partition's per-key offsets, and pass 2 emits every row with its
+  * running sums. Key values are copied before they outlive a row: map
+  * inserts in pass 1, the current-group key in pass 2.
   *
   * Determinism contract: each emitted cum equals the sequential
   * in-order sum ONLY when the summed columns are integer-valued
@@ -63,21 +50,8 @@ object RangeCum {
   def cumSum(df: DataFrame, keys: Seq[String], orderCol: String,
              sumCols: Seq[String], ascending: Boolean = true,
              maxDriverEntries: Int = 4000000): DataFrame =
-    cumSumWithTotals(df, keys, orderCol, sumCols, ascending,
+    cumSumWithTotalsN(df, keys, orderCol, sumCols, ascending,
       maxDriverEntries)._1
-
-  /** [[cumSumWithTotals]] minus the key count (source-compat shim for
-    * callers that don't need a broadcast-size decision). */
-  def cumSumWithTotals(df: DataFrame, keys: Seq[String], orderCol: String,
-                       sumCols: Seq[String], ascending: Boolean,
-                       maxDriverEntries: Int): (DataFrame, DataFrame) = {
-    val (cum, totals, _) = cumSumWithTotalsN(df, keys, orderCol, sumCols,
-      ascending, maxDriverEntries)
-    (cum, totals)
-  }
-  def cumSumWithTotals(df: DataFrame, keys: Seq[String], orderCol: String,
-                       sumCols: Seq[String]): (DataFrame, DataFrame) =
-    cumSumWithTotals(df, keys, orderCol, sumCols, true, 4000000)
 
   /** Null-safe double read of sum column `i` (null counts as 0). */
   private def numGetter(dt: DataType, i: Int): InternalRow => Double = {
@@ -119,12 +93,9 @@ object RangeCum {
       : (DataFrame, DataFrame, Long) = {
     require(sumCols.nonEmpty, "RangeCum.cumSum needs at least one sum column")
     val spark = df.sparkSession
-    val np = spark.sessionState.conf.numShufflePartitions
     val ocol = if (ascending) col(orderCol).asc else col(orderCol).desc
-    val sortCols = keys.map(col) :+ ocol
-    val sorted = df.repartitionByRange(np, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    val schema = sorted.schema
+    val scan = PartitionPrefixScan.sorted(df, keys.map(col) :+ ocol: _*)
+    val schema = scan.schema
     val keyIdx = keys.map(schema.fieldIndex).toArray
     val keyTypes = keyIdx.map(schema.fields(_).dataType)
     // key equality runs through Seq[Any].equals in the driver offset map:
@@ -141,7 +112,6 @@ object RangeCum {
     val nSum = sumIdx.length
     val num: Array[InternalRow => Double] =
       sumIdx.map(i => numGetter(schema.fields(i).dataType, i))
-    val rdd = sorted.queryExecution.toRdd // both passes reuse this sort's shuffle files
     // key values WITHOUT copying — valid only until the iterator's next()
     def rawKey(r: InternalRow): Seq[Any] = {
       val a = new Array[Any](keyIdx.length)
@@ -152,13 +122,11 @@ object RangeCum {
       }
       scala.collection.immutable.ArraySeq.unsafeWrapArray(a)
     }
-    // deep-copied key, safe to hold across rows / ship to the driver
     def copyKey(k: Seq[Any]): Seq[Any] =
       k.map(v => if (v == null) null else InternalRow.copyValue(v))
-    // pass 1: per-(partition, key) subtotals, in in-partition key order
-    val subtotals = rdd.mapPartitionsWithIndex { (pi, it) =>
-      val m = scala.collection.mutable.LinkedHashMap
-        .empty[Seq[Any], Array[Double]]
+    // pass 1: per-key subtotals of each partition, in in-partition key order
+    val subtotals = scan.summarize { it =>
+      val m = mutable.LinkedHashMap.empty[Seq[Any], Array[Double]]
       it.foreach { r =>
         val kRaw = rawKey(r)
         var t = m.getOrElse(kRaw, null)
@@ -169,74 +137,54 @@ object RangeCum {
         var i = 0
         while (i < nSum) { t(i) += num(i)(r); i += 1 }
       }
-      m.iterator.map { case (k, t) => (pi, k, t) }
-    }.collect()
-    require(subtotals.length <= maxDriverEntries,
-      s"RangeCum.cumSum: ${subtotals.length} (partition, key) subtotals " +
+      m.toArray
+    }
+    val nEntries = subtotals.iterator.map(_.length).sum
+    require(nEntries <= maxDriverEntries,
+      s"RangeCum.cumSum: $nEntries (partition, key) subtotals " +
         s"exceed maxDriverEntries=$maxDriverEntries — too many keys for " +
         s"the driver offset scan; aggregate keys first or raise the cap")
-    // driver scan: running offset per key across partitions in range order
-    val offsets: Map[Int, Map[Seq[Any], Array[Double]]] = {
-      val byPart = scala.collection.mutable.Map
-        .empty[Int, scala.collection.mutable.Map[Seq[Any], Array[Double]]]
-      subtotals.groupBy(_._2).foreach { case (k, entries) =>
-        var acc = new Array[Double](nSum)
-        entries.sortBy(_._1).foreach { case (pi, _, tot) =>
-          byPart.getOrElseUpdate(pi,
-            scala.collection.mutable.Map.empty)(k) = acc
-          val next = new Array[Double](nSum)
-          var i = 0
-          while (i < nSum) { next(i) = acc(i) + tot(i); i += 1 }
-          acc = next
-        }
-      }
-      byPart.map { case (pi, m) => pi -> m.toMap }.toMap
+    // driver scan in range order: each partition's seed is every key's
+    // running sums BEFORE it; what remains in `run` are the grand totals
+    val run = mutable.LinkedHashMap.empty[Seq[Any], Array[Double]]
+    val seeds: Array[Map[Seq[Any], Array[Double]]] = subtotals.map { part =>
+      part.iterator.map { case (k, tot) =>
+        val before = run.getOrElse(k, new Array[Double](nSum))
+        run(k) = Array.tabulate(nSum)(i => before(i) + tot(i))
+        k -> before
+      }.toMap
     }
-    val bc = spark.sparkContext.broadcast(offsets)
     val outSchema = StructType(schema.fields ++
       sumCols.map(c => StructField(s"__cum_$c", DoubleType, nullable = false)))
     // pass 2: seed each key's running sums from its offset, emit per row
-    val out = rdd.mapPartitionsWithIndex { (pi, it) =>
-      val partOffsets = bc.value.getOrElse(pi, Map.empty[Seq[Any], Array[Double]])
+    val cum = scan.emit(seeds, outSchema) { (partOffsets, it) =>
       var curKey: Seq[Any] = null
-      var run: Array[Double] = null
+      var sums: Array[Double] = null
       val joined = new JoinedRow
       it.map { r =>
         val kRaw = rawKey(r)
         if (curKey == null || kRaw != curKey) {
           curKey = copyKey(kRaw)
-          run = partOffsets.getOrElse(curKey,
-            new Array[Double](nSum)).clone()
+          sums = partOffsets.getOrElse(curKey, new Array[Double](nSum)).clone()
         }
         val cums = new GenericInternalRow(nSum)
         var i = 0
         while (i < nSum) {
-          run(i) += num(i)(r)
-          cums.update(i, run(i))
+          sums(i) += num(i)(r)
+          cums.update(i, sums(i))
           i += 1
         }
         joined(r, cums): InternalRow
       }
     }
-    val cum = InternalRows.toDF(spark, out, outSchema)
-    // grand totals per key: one more fold over the ALREADY-COLLECTED
-    // subtotal array — no cluster work (keys are already internal-typed
-    // copies, so the totals frame goes through the InternalRow path too)
+    // grand totals per key: driver-built from the pass-1 fold, no cluster
+    // work (keys are already internal-typed copies)
     val totSchema = StructType(keyIdx.map(schema.fields(_)) ++
       sumCols.map(c => StructField(s"__tot_$c", DoubleType, nullable = false)))
-    val totRows: Seq[InternalRow] = subtotals.groupBy(_._2).map { case (k, entries) =>
-      val tot = new Array[Double](nSum)
-      entries.foreach { case (_, _, t) =>
-        var i = 0
-        while (i < nSum) { tot(i) += t(i); i += 1 }
-      }
-      val vals = new Array[Any](k.length + nSum)
-      k.copyToArray(vals)
-      var i = 0
-      while (i < nSum) { vals(k.length + i) = tot(i); i += 1 }
-      new GenericInternalRow(vals): InternalRow
+    val totRows: Seq[InternalRow] = run.iterator.map { case (k, tot) =>
+      new GenericInternalRow((k ++ tot).toArray): InternalRow
     }.toSeq
-    val totals = InternalRows.toDF(spark,
+    val totals = Bridge.toDF(spark,
       spark.sparkContext.parallelize(totRows, 1), totSchema)
     (cum, totals, totRows.size.toLong)
   }

@@ -4,34 +4,24 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, JoinedRow}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.InternalRows
 import org.apache.spark.sql.types.StructType
 
 /** Distributed `lead(c, 1) OVER (ORDER BY …)` WITHOUT the unpartitioned
-  * window — the [[RangeCum]] range-sort scaffold applied to successor
-  * lookup. An `ORDER BY`-only window moves the whole frame into ONE
-  * partition (Spark's WindowExec warns and then does exactly that),
-  * which is fine for the bounded curve frames (kaplanMeier's ≤bins
-  * rows) but a row-scale funnel when the frame is a full table —
-  * q_jaro's successor-name pairing over supplier was the one such site
+  * window — a [[PartitionPrefixScan]] applied to successor lookup. An
+  * `ORDER BY`-only window moves the whole frame into ONE partition
+  * (Spark's WindowExec warns and then does exactly that), which is fine
+  * for the bounded curve frames (kaplanMeier's ≤bins rows) but a
+  * row-scale funnel when the frame is a full table — q_jaro's
+  * successor-name pairing over supplier was the one such site
   * engine-wide.
   *
-  * Shape: range-partition by the order columns, sort within partitions
-  * (one Tungsten sort shuffle, reused by both passes), collect each
-  * non-empty partition's FIRST row's lead-column values to the driver
-  * (O(#partitions) rows), broadcast each partition's successor values
-  * (the first row of the next non-empty partition), then a second pass
-  * zips every row with its in-partition successor — the last row of a
-  * partition takes the broadcast handoff instead, and the globally last
-  * row gets nulls, exactly SQL `lead`'s contract.
-  *
-  * Both passes run on `queryExecution.toRdd` (InternalRow, the RangeCum
-  * §6 mechanism). The sorted iterator reuses its UnsafeRow buffer and
-  * this scaffold PEEKS at the successor, so the current row is copied
-  * BEFORE the peek (the peek overwrites the shared buffer); the peeked
-  * successor's lead values ride raw — the planned RDDScanExec projects
-  * the emitted JoinedRow before the iterator advances again. Collected
-  * / broadcast lead values are deep-copied (`InternalRow.copyValue`).
+  * Shape: a [[PartitionPrefixScan]] over the order columns. Pass 1
+  * collects each non-empty partition's FIRST row's lead-column values
+  * (O(#partitions) rows, deep-copied); each partition's seed is the
+  * first row of the next non-empty partition. Pass 2 zips every row with
+  * its in-partition successor — the last row of a partition takes the
+  * seed instead, and the globally last row gets nulls, exactly SQL
+  * `lead`'s contract.
   *
   * Determinism: with a total order (the order columns contain a unique
   * key) the result is bit-identical to the sequential window. With ties
@@ -47,16 +37,11 @@ object RangeLead {
             leadCols: Seq[String]): DataFrame = {
     require(orderCols.nonEmpty, "RangeLead.lead1 needs an order column")
     require(leadCols.nonEmpty, "RangeLead.lead1 needs a lead column")
-    val spark = df.sparkSession
-    val np = spark.sessionState.conf.numShufflePartitions
-    val sortCols = orderCols.map(col(_).asc)
-    val sorted = df.repartitionByRange(np, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
-    val schema = sorted.schema
+    val scan = PartitionPrefixScan.sorted(df, orderCols.map(col(_).asc): _*)
+    val schema = scan.schema
     val leadIdx = leadCols.map(schema.fieldIndex).toArray
     val leadTypes = leadIdx.map(schema.fields(_).dataType)
     val nLead = leadIdx.length
-    val rdd = sorted.queryExecution.toRdd // both passes reuse this sort's shuffle files
     // lead-col values of row r; copied = safe to hold / ship, raw = valid
     // only until the iterator's next advance
     def leadVals(r: InternalRow, copied: Boolean): Array[Any] = {
@@ -73,30 +58,20 @@ object RangeLead {
       }
       a
     }
-    // pass 1: first row's lead-col values per non-empty partition
-    val firsts: Array[(Int, Array[Any])] =
-      rdd.mapPartitionsWithIndex { (pi, it) =>
-        if (it.hasNext) {
-          val r = it.next()
-          Iterator((pi, leadVals(r, copied = true)))
-        } else Iterator.empty
-      }.collect()
+    // pass 1: first row's lead-col values per partition (null when empty)
+    val firsts: Array[Array[Any]] = scan.summarize { it =>
+      if (it.hasNext) leadVals(it.next(), copied = true) else null
+    }
     // successor handoff: partition pi's last row leads into the first row
     // of the next NON-EMPTY partition (range partitions can be empty when
     // the sampled boundaries land between sparse keys)
-    val ordered = firsts.sortBy(_._1)
-    val successor: Map[Int, Array[Any]] =
-      (0 until np).flatMap { pi =>
-        ordered.find(_._1 > pi).map { case (_, vals) => pi -> vals }
-      }.toMap
-    val bc = spark.sparkContext.broadcast(successor)
     val nulls: Array[Any] = Array.fill(nLead)(null)
+    val handoffs = firsts.scanRight(nulls)((f, next) => if (f == null) next else f).tail
     val outSchema = StructType(schema.fields ++
       leadCols.map(c =>
         schema(schema.fieldIndex(c)).copy(name = s"__lead_$c",
           nullable = true)))
-    val out = rdd.mapPartitionsWithIndex { (pi, it) =>
-      val handoff = bc.value.getOrElse(pi, nulls)
+    scan.emit(handoffs, outSchema) { (handoff, it) =>
       val buf = it.buffered
       val joined = new JoinedRow
       new Iterator[InternalRow] {
@@ -112,6 +87,5 @@ object RangeLead {
         }
       }
     }
-    InternalRows.toDF(spark, out, outSchema)
   }
 }

@@ -173,24 +173,37 @@ class ComponentsSpec extends SparkSpec {
     // spec survives scheduler-detail drift but still catches a return to
     // per-action broadcast re-derivation.
     import spark.implicits._
+    val sc = spark.sparkContext
+    // count only the jobs tagged below: other suites' jobs on the shared
+    // context must not leak into the budget
+    val tag = "components-job-budget"
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val tags = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.tags")))
+        if (tags.exists(_.split(",").contains(tag))) jobs.incrementAndGet()
+      }
     }
     val base = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
     val labels = Components.connectedComponents(base)
     labels.count() // settle the standing labeling before counting
-    spark.sparkContext.addSparkListener(listener)
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
     try {
       val batch = Seq((3L, 10L), (30L, 31L)).toDF("id_a", "id_b")
       val upd = Components.updateComponents(labels, batch)
       upd.orderBy("id").collect()
-      Thread.sleep(1000) // listener bus is async
+      sc.removeJobTag(tag)
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
+      assert(jobs.get() > 0, "no tagged job seen — the count is not live")
       assert(jobs.get() <= 16, s"updateComponents fold+action ran " +
         s"${jobs.get()} jobs — the fused shape runs well under 16")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("empty pair frame yields empty components and a no-op dedup") {

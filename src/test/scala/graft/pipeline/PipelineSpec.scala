@@ -930,6 +930,17 @@ class PipelineSpec extends SparkSpec {
       3L -> ((1L, other.length.toLong))))
   }
 
+  test("syntheticPngMemo keeps serving cached seeds once the memo is full") {
+    val early = Multimodal.syntheticPngMemo(-1L, 1, 1)
+    (0 to Multimodal.MaxPngMemo).foreach(i =>
+      Multimodal.syntheticPngMemo(i.toLong, 1, 1))
+    assert(Multimodal.syntheticPngMemo(-1L, 1, 1) eq early)
+    // seeds past the cap still encode, just uncached
+    val late = Multimodal.MaxPngMemo + 7L
+    assert(Multimodal.syntheticPngMemo(late, 1, 1) sameElements
+      Multimodal.syntheticPng(late, 1, 1))
+  }
+
   test("ImageIOCodec decodes synthetic PNG exactly; unknown payloads fall back") {
     import spark.implicits._
     val df = Seq((7L, Multimodal.syntheticPng(7L)), (8L, Array[Byte](1, 2, 3)))
