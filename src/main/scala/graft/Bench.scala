@@ -188,11 +188,18 @@ object Bench {
     // noop sink so the FULL plan executes — count() would let the optimizer
     // prune expensive map-side projections (per-row distances, string
     // suites) right out of the measured plan. Two runs, report the min:
-    // steady-state number, halves the run-to-run noise.
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+    // steady-state number, halves the run-to-run noise. A row that throws
+    // keeps its (meaningless) time under `queries` — the field's shape is
+    // fixed — and is named with its exception class under `failed`.
+    val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    def once(name: String,
+             fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      catch { case t: Throwable =>
+        failed(name) = t.getClass.getName
+        System.err.println(s"[bench] $name failed: $t")
+      }
       (System.nanoTime() - t0) / 1e9
     }
     // benchQueries = all driver queries minus the gate-only verification
@@ -223,7 +230,7 @@ object Bench {
       // they stop billing the next query (the in-suite-vs-idle tail)
       System.gc()
       Thread.sleep(150)
-      val r1 = once(fn); val r2 = once(fn)
+      val r1 = once(name, fn); val r2 = once(name, fn)
       // stderr progress marker so a long (decade-campaign) run is
       // observable mid-flight; stdout stays the single JSON line
       System.err.println(f"[bench] $name ${math.min(r1, r2)}%.2fs")
@@ -233,7 +240,7 @@ object Bench {
       // regression" was exactly this, unreproducible at steady state. One
       // more run only in that case keeps the common path at two runs.
       val best = math.min(r1, r2)
-      name -> (if (math.abs(r1 - r2) > 0.5 * best) math.min(best, once(fn))
+      name -> (if (math.abs(r1 - r2) > 0.5 * best) math.min(best, once(name, fn))
                else best)
     }
     val total = if (results.nonEmpty) results.values.sum else 0.0
@@ -272,6 +279,8 @@ object Bench {
       graft.util.SkipMetrics.nonZero()
         .map { case (k, v) => "\"" + k + "\":" + v }
         .mkString(""","skips":{""", ",", "}")
+    val failedEntries = failed.toSeq.map { case (k, cls) =>
+      "\"" + k + "\":\"" + cls + "\"" }
     // Full per-query detail goes to a file: with 90+ queries the one-line
     // map exceeds the harness's 2000-char output tail, which truncated the
     // line mid-JSON and left it unparseable in rounds 1-4. The printed line
@@ -280,7 +289,7 @@ object Bench {
     val fullJson = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString(
         s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":{""",
-        ",", s"""}$bandJson,"sf":"$sfDir"}""")
+        ",", s"""}$bandJson,"failed":{${failedEntries.mkString(",")}},"sf":"$sfDir"}""")
     try {
       val w = new java.io.PrintWriter("BENCH_FULL.json")
       try w.println(fullJson) finally w.close()
@@ -288,7 +297,16 @@ object Bench {
     val budget = 1700 // line must survive inside a ~2000-char stdout tail
     val sorted = results.toSeq.sortBy(-_._2)
     val head = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":{"""
-    val tail = s"""}$bandJson,"n_queries":${results.size},"detail":"BENCH_FULL.json","sf":"$sfDir"}"""
+    def tailWith(shown: Seq[String]): String =
+      s"""}$bandJson,"failed":{${shown.mkString(",")}},"n_failed":${failed.size},""" +
+        s""""n_queries":${results.size},"detail":"BENCH_FULL.json","sf":"$sfDir"}"""
+    // rows that threw: the count always, then the entries of the row →
+    // exception class map that fit in the budget, ahead of the per-query
+    // times (BENCH_FULL.json has the whole map) — a run where every row
+    // throws (a wrong SF dir) must not push the line past the tail
+    val failedShown = failedEntries.foldLeft(Vector.empty[String]) { (acc, e) =>
+      if (head.length + tailWith(acc :+ e).length <= budget) acc :+ e else acc }
+    val tail = tailWith(failedShown)
     val sb = new StringBuilder(head)
     var first = true
     sorted.foreach { case (k, v) =>

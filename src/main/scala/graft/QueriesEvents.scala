@@ -918,11 +918,12 @@ private[graft] object QueriesEvents {
     // ---- events: sessionization via window gaps ---------------------------
     QueryDef("q_events_sessions",
       (s, d) => {
-        // ordering by epoch seconds instead of the raw timestamp is
-        // session-equivalent: ties within one second have gap 0 either way
-        val ev = events(s, d).withColumn("tss", col("ts").cast("long"))
-        graft.events.Sessionize.sessionBounds(ev, Seq("user_id"), "tss",
-            gap = 1800L)
+        // order and gap on epoch micros, the resolution of `ts`: whole
+        // seconds would merge a gap of 1800.x s that the oracle's
+        // fractional epoch() splits
+        val ev = events(s, d).withColumn("tsu", unix_micros(col("ts")))
+        graft.events.Sessionize.sessionBounds(ev, Seq("user_id"), "tsu",
+            gap = 1800L * 1000000)
           .groupBy("user_id")
           .agg(count(lit(1)).as("n_sessions"), sum("n_events").as("n_events"))
           .orderBy("user_id")

@@ -1159,77 +1159,33 @@ object Stats {
       .select("n", "k", "sum_item_var", "total_var", "alpha")
   }
 
-  /** Exact per-group quantiles WITHOUT per-group buffers: fold to the
-    * (keys, value) count frame, [[graft.util.RangeCum]] the counts in
-    * value order within each key, and for every requested p pick the
-    * two covering order statistics (rank = p·(n−1), the
-    * ExactPercentile / quantile_cont convention) — interpolated as
-    * lo + (hi − lo)·frac, so results match the buffering aggregate
-    * bit-for-bit while work stays bounded by DISTINCT (keys, value)
-    * pairs. This is the 100-TB shape for "P50/P95/P99 per bucket"
-    * readouts where per-group sort buffers (Spark's `percentile`, the
-    * house ExactPercentile) hold whole groups in memory: groups here
-    * can be arbitrarily large, only their value cardinality matters,
-    * and the range-sort scaffold keeps even continuous columns
-    * distributed.
+  /** Exact per-group quantiles WITHOUT per-group buffers, on the
+    * [[SortedQuantiles]] engine: the (keys, value) count cells are
+    * range-sorted and the two covering order statistics of every
+    * requested p (rank = p·(n−1), the ExactPercentile / quantile_cont
+    * convention) are picked and interpolated like the buffering
+    * aggregate, bit-for-bit, while work stays bounded by DISTINCT
+    * (keys, value) pairs. This is the 100-TB shape for "P50/P95/P99 per
+    * bucket" readouts where per-group sort buffers (Spark's
+    * `percentile`, the house ExactPercentile) hold whole groups in
+    * memory: groups here can be arbitrarily large, only their value
+    * cardinality matters.
     *
-    * Returns one row per key with a `q_<p>` double column per
-    * requested quantile (p rendered with '.'→'_', e.g. q_0_5); empty
-    * keys cannot occur. Two passes over the cell frame (cum + pick),
-    * one over the corpus. */
+    * Rows with a null key, or a null or NaN value, are dropped
+    * (`na.drop`), so a group whose values are all NaN is omitted.
+    * Returns one row per key with a `q_<p>` double column per requested
+    * quantile (p rendered with '.'→'_', e.g. q_0_5); empty keys cannot
+    * occur. */
   def quantilesByCounts(df: DataFrame, valueCol: String,
                         keys: Seq[String],
                         ps: Seq[Double]): DataFrame = {
-    require(ps.nonEmpty, "quantilesByCounts: no quantiles requested")
-    ps.foreach(p => require(p >= 0 && p <= 1,
-      s"quantilesByCounts: p must be in [0,1], got $p"))
     require(keys.nonEmpty, "quantilesByCounts needs key columns " +
       "(wrap a lit in a column for a global quantile)")
-    val x = col(valueCol).cast("double")
-    val cells = df.na.drop(keys :+ valueCol)
-      .groupBy((keys.map(col) :+ x.as("__v")): _*)
-      .agg(count(lit(1)).cast("double").as("__c"))
-    // per-key n from cumSumWithTotalsN's driver-built totals (broadcast
-    // join) — the previous max().over(partitionBy(keys)) re-shuffled the
-    // whole cell frame into #keys partitions (one straggler per key at
-    // scale); totals are the same integer-double sums bit-for-bit
-    val (cum, totals, nKeys) = graft.util.RangeCum.cumSumWithTotalsN(
-      cells, keys, "__v", Seq("__c"))
-    val tot = totals.withColumnRenamed("__tot___c", "__n")
-    val totRenamed = keys.foldLeft(tot)((d, k) =>
-      d.withColumnRenamed(k, s"__t_$k"))
-    val joinCond = keys.map(k =>
-      cum(k) <=> totRenamed(s"__t_$k")).reduce(_ && _)
-    // shuffle-join fallback past the broadcast key ceiling: a per-
-    // executor hash relation of millions of keys on top of the offsets
-    // broadcast is a memory wall the replaced window never had
-    val totSide = if (nKeys <= graft.util.RangeCum.MaxBroadcastKeys)
-      broadcast(totRenamed) else totRenamed
-    val withN = cum.join(totSide, joinCond)
-      .drop(keys.map(k => s"__t_$k"): _*)
-    def nameOf(p: Double): String = "q_" + p.toString.replace('.', '_')
-    // rank r = p(n-1) zero-based -> covering positions r+1 (lo) and
-    // r+2 (hi, clamped); frac = r - floor(r)
-    val picks = ps.flatMap { p =>
-      val r = lit(p) * (col("__n") - 1)
-      val loPos = floor(r) + 1
-      val hiPos = least(floor(r) + 2, col("__n"))
-      def covering(pos: Column) =
-        when(col("__cum___c") >= pos &&
-          col("__cum___c") - col("__c") < pos, col("__v"))
-      Seq(min(covering(loPos)).as(s"__lo_${nameOf(p)}"),
-        min(covering(hiPos)).as(s"__hi_${nameOf(p)}"),
-        first(r - floor(r)).as(s"__fr_${nameOf(p)}"))
-    }
-    val agg = withN.groupBy(keys.map(col): _*)
-      .agg(picks.head, picks.tail: _*)
-    ps.foldLeft(agg) { (d, p) =>
-      val nm = nameOf(p)
-      d.withColumn(nm,
-        col(s"__lo_$nm") +
-          (col(s"__hi_$nm") - col(s"__lo_$nm")) * col(s"__fr_$nm"))
-        .drop(s"__lo_$nm", s"__hi_$nm", s"__fr_$nm")
-    }
+    val reqs = Seq(SortedQuantiles.Req("__q", col(valueCol), ps))
+    SortedQuantiles.of(df.na.drop(keys :+ valueCol), keys, reqs)
+      .select(keys.map(col) ++ ps.zipWithIndex.map { case (p, i) =>
+        element_at(col("__q"), i + 1).as("q_" + p.toString.replace('.', '_'))
+      }: _*)
   }
 
   /** Weighted moments per group — the readout for importance-weighted /

@@ -264,27 +264,31 @@ object Clean {
     * (madOutlierCounts counts against them) pays ONE corpus scan. */
   private def madFenceTuples(cells: DataFrame, cols: Seq[String], k: Double)
       : Seq[(String, Double, Double, Double, Double)] = {
-    val medRow = graft.agg.SortedQuantiles
-      .ofCounts(cells, Nil, madCellReqs(cols)).head()
-    val med = cols.zipWithIndex.map { case (c, i) =>
-      c -> medRow.getSeq[Double](i)(0)
-    }.toMap
+    val med = medians(cells, cols, madCellReqs(cols))
     val medByQc = element_at(
       array(cols.map(c => lit(med(c))): _*), col("__qc") + 1)
     val devCells = cells
       .withColumn("__v", abs(col("__v") - medByQc))
       .groupBy(col("__qc"), col("__v"))
       .agg(sum(col("__c")).as("__c"))
-    val madReqs = cols.map(c =>
-      graft.agg.SortedQuantiles.Req(s"__d_$c", col(c), Seq(0.5)))
-    val madRow =
-      graft.agg.SortedQuantiles.ofCounts(devCells, Nil, madReqs).head()
-    cols.zipWithIndex.map { case (c, i) =>
-      val m = med(c)
-      val mad = madRow.getSeq[Double](i)(0)
-      val spread = k * 1.4826 * mad
-      (c, m, mad, m - spread, m + spread)
+    val mad = medians(devCells, cols, cols.map(c =>
+      graft.agg.SortedQuantiles.Req(s"__d_$c", col(c), Seq(0.5))))
+    cols.map { c =>
+      val spread = k * 1.4826 * mad(c)
+      (c, med(c), mad(c), med(c) - spread, med(c) + spread)
     }
+  }
+
+  /** Each column's global median off a cell frame, read straight from
+    * the driver-side pick (no frame, no job beyond the pick's own). */
+  private def medians(cells: DataFrame, cols: Seq[String],
+                      reqs: Seq[graft.agg.SortedQuantiles.Req]): Map[String, Double] = {
+    val qs = graft.agg.SortedQuantiles.pick(cells, Nil, reqs).headOption
+      .fold(Array.fill[Array[Double]](cols.size)(null))(_.quantiles)
+    cols.zip(qs).map { case (c, q) =>
+      require(q != null, s"calcMadFences: column $c has no non-null values")
+      c -> q(0)
+    }.toMap
   }
 
   /** Count of median/MAD outliers per column — [[outlierCounts]]'s robust

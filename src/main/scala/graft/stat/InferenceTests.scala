@@ -1,6 +1,6 @@
 package graft.stat
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -206,52 +206,25 @@ object InferenceTests {
       .select("k", "n", "dof", "h_stat", "h_corrected")
   }
 
-  /** Exact per-group median WITHOUT buffering group values: fold to the
-    * (group, value) count frame, [[graft.util.RangeCum]] the counts in
-    * value order within each group, and pick the order statistics
-    * covering positions ⌊(n+1)/2⌋ and ⌊n/2⌋+1 — interpolated as
-    * lo + (hi − lo)·0.5, the quantile_cont / ExactPercentile chain, so
-    * results are bit-identical to the buffering aggregate. Work is
-    * bounded by DISTINCT (group, value) pairs, and the range-sort
-    * scaffold keeps even continuous columns distributed — the
-    * ExactPercentile form buffers each whole group in ONE aggregation
-    * buffer, which at k ≈ 3 groups of 100-TB data is a two-order-of-
-    * magnitude wall (measured 37× at 100× data before this rewrite).
-    * Returns (group, __med). */
+  /** Exact per-group median WITHOUT buffering group values: the
+    * [[graft.agg.SortedQuantiles]] engine at p = 0.5 over the
+    * (group, value) count cells — the order statistics at ⌊(n+1)/2⌋ and
+    * ⌊n/2⌋+1, interpolated as lo + (hi − lo)·0.5, the quantile_cont /
+    * ExactPercentile chain, so results are bit-identical to the
+    * buffering aggregate. Work is bounded by DISTINCT (group, value)
+    * pairs, and the range-sort keeps even continuous columns
+    * distributed — the ExactPercentile form buffers each whole group in
+    * ONE aggregation buffer, which at k ≈ 3 groups of 100-TB data is a
+    * two-order-of-magnitude wall (measured 37× at 100× data before this
+    * rewrite). Returns (group, __med) as a driver-local frame of k rows. */
   private def medianByCounts(df: DataFrame, valueCol: String,
                              groupCol: String): DataFrame = {
-    val x = col(valueCol).cast("double")
-    val cells = df.filter(x.isNotNull && col(groupCol).isNotNull)
-      .groupBy(col(groupCol).as("__bf_g"), x.as("__v"))
-      .agg(count(lit(1)).cast("double").as("__c"))
-    // per-group n comes from cumSumWithTotalsN's driver-built totals frame
-    // (broadcast join) — the previous max().over(partitionBy(group))
-    // re-shuffled the ENTIRE cell frame into k partitions (k ≈ groups),
-    // a one-straggler-per-group wall at scale; the totals are the same
-    // integer-double sums bit-for-bit
-    val (cum, totals, nKeys) = graft.util.RangeCum.cumSumWithTotalsN(
-      cells, Seq("__bf_g"), "__v", Seq("__c"))
-    val tot = totals.withColumnRenamed("__tot___c", "__n")
-      .withColumnRenamed("__bf_g", "__t_bf_g")
-    // shuffle-join fallback past the broadcast key ceiling (same guard
-    // as Stats.quantilesByCounts)
-    val totSide = if (nKeys <= graft.util.RangeCum.MaxBroadcastKeys)
-      broadcast(tot) else tot
-    val withN = cum.join(totSide,
-      col("__bf_g") <=> col("__t_bf_g")).drop("__t_bf_g")
-    def valueAt(pos: Column): Column =
-      when(col("__cum___c") >= pos &&
-        col("__cum___c") - col("__c") < pos, col("__v"))
-    val lo = floor((col("__n") + 1) / 2)
-    val hi = floor(col("__n") / 2) + 1
-    withN
-      .withColumn("__lo_v", valueAt(lo))
-      .withColumn("__hi_v", valueAt(hi))
-      .groupBy("__bf_g")
-      .agg(min("__lo_v").as("__lo"), min("__hi_v").as("__hi"))
-      .withColumn("__med",
-        col("__lo") + (col("__hi") - col("__lo")) * 0.5)
-      .select("__bf_g", "__med")
+    val reqs = Seq(graft.agg.SortedQuantiles.Req("__m", col(valueCol), Seq(0.5)))
+    graft.agg.SortedQuantiles.of(
+        df.where(col(groupCol).isNotNull)
+          .select(col(groupCol).as("__bf_g"), col(valueCol)),
+        Seq("__bf_g"), reqs)
+      .select(col("__bf_g"), element_at(col("__m"), 1).as("__med"))
   }
 
   /** Brown-Forsythe test for equality of group variances (Levene's test

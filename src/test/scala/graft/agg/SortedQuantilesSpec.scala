@@ -133,4 +133,70 @@ class SortedQuantilesSpec extends SparkSpec {
     }
     assertSameRows(a, b, Seq("s"))
   }
+
+  /** Jobs launched by `body`, counted the ComponentsSpec way: only
+    * `onJobStart` events carrying this call's own job tag, read after the
+    * listener bus is drained. */
+  private def taggedJobs(tag: String)(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val tags = Option(j.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.tags")))
+        if (tags.exists(_.split(",").contains(tag))) jobs.incrementAndGet()
+      }
+    }
+    sc.addSparkListener(listener)
+    sc.addJobTag(tag)
+    try {
+      body
+      sc.removeJobTag(tag)
+      org.apache.spark.sql.graft.Bridge.drainListenerBus(sc)
+      assert(jobs.get() > 0, s"$tag: no tagged job seen — the count is not live")
+      jobs.get()
+    } finally {
+      sc.removeJobTag(tag)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  // job budgets: each pick runs the cell fold's and the range sort's
+  // shuffle stages, the range sample, pass 1 and the pass-2 fold — five
+  // jobs — and finishes on the driver, so its result reads with none
+
+  test("job budget: global globalArray") {
+    val n = taggedJobs("sq-global-array") {
+      SortedQuantiles.globalArray(messy, col("cont"), ps)
+    }
+    assert(n <= 5, s"globalArray ran $n jobs")
+  }
+
+  test("job budget: keyed of, including reading its result") {
+    val n = taggedJobs("sq-keyed-of") {
+      SortedQuantiles.of(messy, Seq("s"), Seq(
+        SortedQuantiles.Req("__a", col("cont"), ps),
+        SortedQuantiles.Req("__b", col("tied"), Seq(0.5)))).collect()
+    }
+    assert(n <= 5, s"keyed SortedQuantiles.of ran $n jobs")
+  }
+
+  test("job budget: Clean.calcMadFences") {
+    val n = taggedJobs("sq-mad-fences") {
+      graft.clean.Clean.calcMadFences(messy, Seq("cont", "tied")).collect()
+    }
+    // two picks (the median, then the MAD off the deviation cells)
+    assert(n <= 11, s"calcMadFences ran $n jobs")
+  }
+
+  test("driver guard refuses more (group, position) picks than the cap") {
+    // one group, 2 positions per p: just past the cap, refused after
+    // pass 1 and before any pick is allocated
+    val manyPs = Seq.fill(graft.util.RangeCum.MaxDriverEntries / 2 + 1)(0.5)
+    val e = intercept[IllegalArgumentException] {
+      SortedQuantiles.globalArray(messy, col("cont"), manyPs)
+    }
+    assert(e.getMessage.contains("(group, position) picks exceed"))
+  }
 }

@@ -632,6 +632,47 @@ class StatsSpec extends SparkSpec {
     }
   }
 
+  test("quantilesByCounts at integral ranks next to an infinity: bit-for-bit with ExactPercentile") {
+    import spark.implicits._
+    val inf = Double.PositiveInfinity
+    // p = 0 and p = 1 land on integral ranks, where lo + (hi − lo)·0
+    // would read ∞·0 or ∞ − ∞ (NaN); p = 0.5 interpolates between
+    // statistics on both sides of an infinity
+    val rows = Seq("a" -> 1.0, "a" -> inf,
+      "b" -> -inf, "b" -> 2.0, "b" -> inf,
+      "c" -> -inf, "c" -> 3.0,
+      "d" -> inf)
+    val df = rows.toDF("g", "v")
+    val ps = Seq(0.0, 0.5, 1.0)
+    val got = graft.agg.Stats.quantilesByCounts(df, "v", Seq("g"), ps)
+      .collect().map(r => r.getString(0) -> (1 to ps.size).map(r.getDouble)).toMap
+    val viaBuffer = df.groupBy("g").agg(
+      graft.expr.ExactPercentile.of(col("v"), ps).as("qs"))
+      .collect().map(r => r.getString(0) -> r.getSeq[Double](1)).toMap
+    def bits(d: Double) = java.lang.Double.doubleToLongBits(d)
+    assert(got.keySet == viaBuffer.keySet)
+    got.foreach { case (g, qs) =>
+      qs.zip(viaBuffer(g)).zip(ps).foreach { case ((a, b), p) =>
+        assert(bits(a) == bits(b), s"group $g p=$p: $a vs $b")
+      }
+    }
+    assert(got("a") == Seq(1.0, inf, inf))
+  }
+
+  test("quantilesByCounts drops NaN values like null ones") {
+    import spark.implicits._
+    val nan = Double.NaN
+    // NaN sorts last, so counting it would turn p = 1 into NaN; a group
+    // of NaNs only must be omitted like a group of nulls
+    val df = Seq[(String, java.lang.Double)](
+      "a" -> 1.0, "a" -> 3.0, "a" -> nan, "a" -> null,
+      "b" -> nan, "b" -> nan,
+      "c" -> 2.0).toDF("g", "v")
+    val got = graft.agg.Stats.quantilesByCounts(df, "v", Seq("g"), Seq(0.5, 1.0))
+      .collect().map(r => r.getString(0) -> Seq(r.getDouble(1), r.getDouble(2))).toMap
+    assert(got == Map("a" -> Seq(2.0, 3.0), "c" -> Seq(2.0, 2.0)))
+  }
+
   test("weightedMoments: frequency-weight identity and Kish n_eff") {
     import spark.implicits._
     // weights as frequencies: w=2 on x=1 plus w=1 on x=4 must equal the
